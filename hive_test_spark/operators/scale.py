@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from hive_test_spark.io import SCRATCH_DIR, load_table, scratch_dir
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
+from hive_test_spark.session import scoped_conf
 
 
 _SAMPLE_FRAC = 0.1
@@ -49,7 +49,6 @@ def scan_tablesample(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic membership twin is ``llm_hash_sample`` (md5-threshold,
     a pure row-value function) — use that when reproducibility across
     engines matters more than statistical independence."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     sampled = (
         li.sample(fraction=_SAMPLE_FRAC, seed=42)
@@ -101,7 +100,6 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the fallback when AQE skew-split cannot help
     (e.g. skewed *aggregation* keys or non-splittable join types).
     """
-    tune(spark)
     c = load_table(spark, sf_dir, "customer").withColumn(
         "salt", F.pmod(F.xxhash64("c_custkey"), F.lit(N_SALTS)).cast("int")
     )
@@ -136,7 +134,6 @@ def join_bucketed_smb(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is THE repeated-join optimization at warehouse scale: pay the
     bucketed write once, skip the join shuffle forever after.
     """
-    tune(spark)
     from hive_test_spark.sources.scans import _sf_tag
 
     tag = _sf_tag(sf_dir).replace(".", "_")
@@ -208,7 +205,6 @@ def scale_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partition-column values survive the directory encoding)."""
     from hive_test_spark.sources.scans import _sf_tag
 
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     path = scratch_dir("scale", _sf_tag(sf_dir), "lineitem_by_year")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -254,7 +250,6 @@ def scale_cbo_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     listing alone misleads (e.g. highly compressed or wide tables).
     Result is hint-free and stats-driven; values hash-match the plain
     join oracle."""
-    tune(spark)
     from hive_test_spark.sources.scans import _sf_tag
 
     tag = _sf_tag(sf_dir).replace(".", "_")
@@ -277,19 +272,15 @@ def scale_cbo_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure(nat_t, "nation")
     sup = spark.table(sup_t)
     nat = spark.table(nat_t)
-    # Save/restore the CBO confs (the AQE_SKEW_CONFS discipline): the
-    # result is materialized WHILE CBO is on, then the session confs go
-    # back — leaving CBO enabled would silently change every later
-    # operator's plans in the shared session.
+    # Scope the CBO confs: the result is materialized WHILE CBO is on,
+    # then the session confs go back — leaving CBO enabled would silently
+    # change every later operator's plans in the shared session.
     cbo_confs = {
         "spark.sql.cbo.enabled": "true",
         "spark.sql.cbo.joinReorder.enabled": "true",
     }
-    saved = {k: spark.conf.get(k, None) for k in cbo_confs}
-    for k, v in cbo_confs.items():
-        spark.conf.set(k, v)
-    try:
-        out = (
+    with scoped_conf(spark, cbo_confs):
+        return (
             sup.join(nat, sup.s_nationkey == nat.n_nationkey)
             .groupBy("n_name")
             .agg(
@@ -298,13 +289,6 @@ def scale_cbo_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    return out
 
 
 @register(
@@ -333,7 +317,6 @@ def scale_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the full-table aggregate. Storing (count, sum) instead of avg is
     what makes the state mergeable — the same decomposition Spark itself
     uses for partial aggregation pushdown."""
-    tune(spark)
     from hive_test_spark.sources.scans import _sf_tag
 
     o = load_table(spark, sf_dir, "orders")
@@ -433,7 +416,6 @@ def scale_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     The verified result aggregates per z-bucket over the WRITTEN layout
     (round-trips the clustering write); the oracle recomputes the same
     integer interleave, proving the z-math bit-identical."""
-    tune(spark)
     from hive_test_spark.sources.scans import _sf_tag
 
     li = load_table(spark, sf_dir, "lineitem").select("l_quantity", "l_extendedprice")
@@ -538,19 +520,9 @@ def scale_aqe_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle vs one task reading 80% of the fact)."""
     from hive_test_spark.sources.scans import _sf_tag
 
-    tune(spark)
     path = scratch_dir("scale", _sf_tag(sf_dir), "aqe_skew_result")
-    saved = {k: spark.conf.get(k, None) for k in AQE_SKEW_CONFS}
-    for k, v in AQE_SKEW_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, AQE_SKEW_CONFS):
         skew_join_frame(spark, sf_dir).write.mode("overwrite").parquet(path)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return spark.read.parquet(path)
 
 
@@ -615,19 +587,9 @@ def scale_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     are IDENTICAL with and without it."""
     from hive_test_spark.sources.scans import _sf_tag
 
-    tune(spark)
     path = scratch_dir("scale", _sf_tag(sf_dir), "bloom_filter_result")
-    saved = {k: spark.conf.get(k, None) for k in BLOOM_CONFS}
-    for k, v in BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, BLOOM_CONFS):
         bloom_join_frame(spark, sf_dir).write.mode("overwrite").parquet(path)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return spark.read.parquet(path)
 
 
@@ -649,7 +611,6 @@ def scan_bucket_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries a full value oracle. At scale the same expression sits in the
     reader filter and, on a table bucketed by the key, prunes whole
     files instead of scanning-and-filtering."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     bucket = F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10).cast(
         "bigint"
@@ -681,7 +642,6 @@ def scale_exchange_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is the difference between one and two full fact-table
     passes whenever a query compares rows against a statistic of the
     same derivation — no manual cache() needed."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     nat_rev = (
@@ -722,7 +682,6 @@ def scale_cache_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical subtrees; cache() is the tool when CONSUMERS differ (here:
     different aggregate keys). At 100 TB you cache the slice that fits
     (memory-and-disk) or checkpoint it — the plan shape is the same."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     hot = (
         li.filter(F.col("l_shipdate") >= "1998-01-01")
@@ -763,7 +722,6 @@ def scale_aqe_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages shrink to match their true output instead of scheduling
     thousands of empty reducers; under-skew the same machinery splits
     (the two are one feature with two directions)."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_orderpriority")
@@ -814,7 +772,6 @@ def scale_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (retry-safe — a rand() salt double-counts rows replayed by task
     retries, and breaks the disjointness that makes distinct counts
     summable)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     stage1 = (
         ev.groupBy(
@@ -869,7 +826,6 @@ def scale_bucket_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed tables in this engine are the SMB/pruning fixtures,
     which all WANT bucketed reads — the SMB join keeps its
     shuffle-free plan either way)."""
-    tune(spark)
     spark.conf.set(
         "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false"
     )
@@ -940,7 +896,6 @@ def scale_range_join_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     the residual-filter kill rate, narrower ones inflate the interval
     fan-out. Same shape as llm_minhash_det's band-bucket join: bucket
     first, exact-verify inside the bucket."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_shipdate").cast("date").alias("point_d"), "l_quantity"
@@ -1038,7 +993,6 @@ def scale_skew_diagnose(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot key inside each partition before the shuffle); the rank window
     and quantiles run on the reduced key dimension, and the 1-row
     stats frame broadcasts over the top-k rows."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     # Both branches (summary stats, hot-key rank) reference the per-key
     # rollup; checkpoint the key-dimension frame so events scans once.
@@ -1152,19 +1106,7 @@ def scale_aqe_join_switch(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle reader keeps off the critical path."""
     from hive_test_spark.sources.scans import _sf_tag
 
-    tune(spark)
     path = scratch_dir("scale", _sf_tag(sf_dir), "aqe_join_switch_result")
-    saved = {k: spark.conf.get(k, None) for k in AQE_JOIN_SWITCH_CONFS}
-    for k, v in AQE_JOIN_SWITCH_CONFS.items():
-        spark.conf.set(k, v)
-    try:
-        aqe_switch_join_frame(spark, sf_dir).write.mode("overwrite").parquet(
-            path
-        )
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    with scoped_conf(spark, AQE_JOIN_SWITCH_CONFS):
+        aqe_switch_join_frame(spark, sf_dir).write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)

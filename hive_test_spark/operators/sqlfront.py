@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from hive_test_spark.io import load_table
 from hive_test_spark.registry import register
-from hive_test_spark.session import tune
+from hive_test_spark.session import scoped_conf
 
 SQL_FRONT_KEYS: list[str] = []
 
@@ -59,7 +59,6 @@ def sql_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB: plan-identical to the DataFrame twin — the front end
     contributes parse time only (milliseconds, driver-side)."""
-    tune(spark)
     _views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
@@ -100,7 +99,6 @@ def sql_star_join_hinted(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: nation/region always broadcast; hinting customer too is
     correct while customers fit executor memory, and AQE demotes it to
     shuffle if statistics say otherwise (hints are advisory)."""
-    tune(spark)
     _views(spark, sf_dir, "orders", "customer", "nation", "region")
     return spark.sql(
         """
@@ -139,7 +137,6 @@ def sql_lateral_view_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage (no exchange); the count agg shuffles (doc_id, tok) —
     explode-then-agg is the linear tokenization template the llm_* text
     ops build on."""
-    tune(spark)
     _views(spark, sf_dir, "documents")
     return spark.sql(
         """
@@ -173,7 +170,6 @@ def sql_distribute_sort_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the write-preparation idiom: cluster rows by key
     and order within files WITHOUT a global sort barrier — one hash
     exchange, no range-partition sampling pass."""
-    tune(spark)
     _views(spark, sf_dir, "orders")
     return spark.sql(
         """
@@ -210,7 +206,6 @@ def sql_semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     early-out probing; the semi/anti forms never materialize order
     columns — the payload-free build is what makes them cheaper than
     inner joins + distinct."""
-    tune(spark)
     _views(spark, sf_dir, "customer", "orders")
     return spark.sql(
         """
@@ -247,7 +242,6 @@ def sql_rollup_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: Spark expands rollup to a single Expand + one hash agg —
     3 output rows per input row pre-combine, NOT three scans; the
     map-side combine keeps the exchange at group-domain size."""
-    tune(spark)
     _views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
@@ -289,7 +283,6 @@ def sql_window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: ONE custkey exchange serves both window functions (same
     partitioning spec); the rank filter cuts output before the final
     sort."""
-    tune(spark)
     _views(spark, sf_dir, "orders")
     return spark.sql(
         """
@@ -338,7 +331,6 @@ def sql_cte_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the full customer slice; the pattern (compare each row to
     its group aggregate) is the decorrelated form Catalyst produces for
     correlated scalar subqueries too."""
-    tune(spark)
     _views(spark, sf_dir, "customer")
     return spark.sql(
         """
@@ -381,7 +373,6 @@ def sql_set_ops_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     single projected column — payload-free and combinable; precedence
     (INTERSECT binds tighter than EXCEPT) is a parser property this op
     pins cross-engine."""
-    tune(spark)
     _views(spark, sf_dir, "customer", "orders")
     return spark.sql(
         """
@@ -425,7 +416,6 @@ def sql_values_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast; the band predicate evaluates in the probe's scan stage,
     so banding costs zero exchanges — the idiom to prefer over a CASE
     ladder when bands live in config, not code."""
-    tune(spark)
     _views(spark, sf_dir, "customer")
     return spark.sql(
         """
@@ -468,7 +458,6 @@ def sql_case_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: one grouped pass with three combinable conditional sums
     — identical exchange profile to PIVOT; the CASE form is what old
     HiveQL corpora contain, so the parser path matters for ports."""
-    tune(spark)
     _views(spark, sf_dir, "orders")
     return spark.sql(
         """
@@ -505,7 +494,6 @@ def sql_cluster_by_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: grouped agg and CLUSTER BY share the same hash key, so
     Catalyst reuses ONE exchange for both — this op exists to pin that
     no second shuffle appears."""
-    tune(spark)
     _views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
@@ -540,7 +528,6 @@ def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     are visible to Catalyst as constants, so partition pruning and
     filter pushdown work exactly as with inline literals — unlike
     driver-side string formatting, with none of the quoting hazards."""
-    tune(spark)
     _views(spark, sf_dir, "customer")
     return spark.sql(
         """
@@ -576,7 +563,6 @@ def sql_transform_using(spark: SparkSession, sf_dir: str) -> DataFrame:
     with executor count, but pays one OS process per task plus
     row-at-a-time text framing — which is exactly why the mapInPandas
     twin exists; keep USING for legacy script compatibility only."""
-    tune(spark)
     _views(spark, sf_dir, "customer")
     return spark.sql(
         """
@@ -622,7 +608,6 @@ def sql_temp_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of re-implementing clamps/parsers per query."""
     from pyspark.sql.functions import pandas_udf
 
-    tune(spark)
     # Built here, not at import time (type resolution needs an active
     # session — same note as udf_pandas_scalar); plain function + explicit
     # returnType, no hint inference.
@@ -666,7 +651,6 @@ def sql_group_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB: pure parse-time sugar — identical two-phase hash
     aggregate + range-partitioned sort plan as the longhand text."""
-    tune(spark)
     _views(spark, sf_dir, "orders")
     return spark.sql(
         """
@@ -715,7 +699,6 @@ def sql_file_direct(spark: SparkSession, sf_dir: str) -> DataFrame:
     reordering and no partition specs (path globs replace partition
     pruning), so production keeps file-direct for exploration and
     registers curated tables for recurring joins."""
-    tune(spark)
     path = f"{sf_dir}/lineitem.parquet"
     return spark.sql(
         f"""
@@ -757,7 +740,6 @@ def sql_positional_ordinals(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: parse-time sugar, zero plan impact — the resolved plan
     is the standard partial/final hash aggregate over the pushed-down
     scan, identical to spelling the expressions out."""
-    tune(spark)
     _views(spark, sf_dir, "orders")
     return spark.sql(
         """
@@ -798,7 +780,6 @@ def sql_pivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional-aggregate pass (no per-value scans) — same plan as the
     CASE matrix. The implicit form (no IN list) needs a prior distinct
     scan to discover values: always enumerate at scale."""
-    tune(spark)
     _views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
@@ -838,7 +819,6 @@ def sql_unpivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per measure with NO shuffle (the aggregate before it already
     collapsed the fact); the UNION-ALL spelling re-SCANS the source
     per measure, which is exactly why the clause form wins at scale."""
-    tune(spark)
     _views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
@@ -909,12 +889,9 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep bounds are known up front; the scripting form wins when the
     loop body must see the previous iteration's result — model-fit
     convergence, retry-until-drained compaction, watermark advance."""
-    tune(spark)
     _views(spark, sf_dir, "orders")
-    prev = spark.conf.get("spark.sql.scripting.enabled", None)
-    try:
-        spark.conf.set("spark.sql.scripting.enabled", "true")
-        out = spark.sql(
+    with scoped_conf(spark, {"spark.sql.scripting.enabled": "true"}):
+        return spark.sql(
             """
             BEGIN
               DECLARE thr BIGINT DEFAULT 1000;
@@ -943,9 +920,3 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
             END
             """
         ).localCheckpoint(eager=True)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", prev)
-    return out

@@ -1,9 +1,16 @@
-"""SparkSession factory and per-query session tuning.
+"""SparkSession factory, per-query session tuning and scoped confs.
 
 The driver may hand us an arbitrary ``SparkSession``; everything that is
-runtime-settable (session timezone, Arrow, AQE) is (re-)applied by
-``tune()`` at the top of every query function so correctness does not
-depend on who built the session.
+runtime-settable (session timezone, Arrow, AQE, shuffle partitions) is
+(re-)applied by ``tune()``, which the registry envelope
+(``registry.register``) runs before every registered query function, so
+correctness does not depend on who built the session or which key ran
+before. Query functions therefore do not call ``tune`` themselves; only
+the unregistered entry points that callers reach directly do.
+
+``scoped_conf`` is the one way a query function changes a conf for part
+of its own run: it sets the confs and restores (or unsets) each one on
+exit, exception or not.
 
 Scale notes (100 TB design): these configs are the single place where
 cluster-level tuning lives. On a real cluster the same factory is used
@@ -15,6 +22,8 @@ shuffle-partition coalescing and skew-join splitting, and
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -100,6 +109,25 @@ def tune(spark: SparkSession) -> SparkSession:
         pass
     _ship_package(spark)
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` for the body of the ``with`` block, then put each one
+    back: the previous value if it had one, otherwise unset. Restores on
+    an exception too, so a conf never leaks into later keys that share
+    the session."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _ship_package(spark: SparkSession) -> None:

@@ -1,4 +1,5 @@
-"""Driver-contract tests: entry smoke, registry consistency (SURVEY.md §5.2)."""
+"""Driver-contract tests: entry smoke, registry consistency (SURVEY.md §5.2),
+key order, and the registry envelope."""
 
 from __future__ import annotations
 
@@ -70,44 +71,6 @@ def test_python_tier_ops_from_foreign_cwd():
     assert "FOREIGN_CWD_OK" in out.stdout, out.stderr[-2000:]
 
 
-# The driver verifies exactly list(queries())[:50] per round. The planned
-# window lives in registry._FRONT (round-5: the agg_approx_distinct
-# retest + the 49 remaining never-tested keys). If an addition displaces
-# a planned key, this fails LOUDLY — new keys must rank outside the
-# window (see registry._rank), or be deliberately prepended to _FRONT
-# (updating its comment).
-def test_driver_window_is_the_planned_one(registry):
-    from hive_test_spark import registry as reg
-
-    qs, _ = registry
-    window = list(qs)[:50]
-    assert len(reg._FRONT) == 50
-    if reg.LATEST_DRIVER_ROUND == reg._PLANNED_AFTER_ROUND and not reg.DRIVER_FAILED:
-        # Pending state (the report this plan targets hasn't landed):
-        # the window is EXACTLY the hand-planned one.
-        assert window == list(reg._FRONT)
-    else:
-        # Post-report (or red rows present): the plan self-advances.
-        # Invariants that must survive any report: every failed key is
-        # in the window, and no slot is wasted on an already-green key
-        # outside _RETEST while unverified keys are still waiting.
-        assert set(reg.DRIVER_FAILED) <= set(window) or len(reg.DRIVER_FAILED) > 50
-        pending = [
-            k
-            for k in qs
-            if k not in reg.DRIVER_SEEN and k not in reg.DRIVER_FAILED
-        ]
-        if len(pending) >= 50:
-            wasted = [
-                k
-                for k in window
-                if k in reg.DRIVER_SEEN
-                and k not in reg._RETEST
-                and k not in reg.DRIVER_FAILED
-            ]
-            assert not wasted, f"window slots wasted on seen keys: {wasted}"
-
-
 # SURVEY §3.2 promises BOTH front ends (DataFrame API and SQL text).
 # operators/sqlfront.py keeps SQL-text twins of flagship surfaces —
 # including HiveQL-dialect constructs (LATERAL VIEW, DISTRIBUTE/SORT/
@@ -121,69 +84,6 @@ def test_sql_front_end_surface(registry):
     for key in SQL_FRONT_KEYS:
         assert key in qs, key
         assert key in oracles, key  # every SQL twin is hash-oracled
-
-
-def test_driver_window_spends_no_slot_on_seen_keys(registry):
-    from hive_test_spark import registry as reg
-
-    qs, _ = registry
-    # Planning hygiene: the window and the r5+ queue never overlap, and
-    # every planned key actually exists (a typo would silently burn a
-    # whole driver-window slot).
-    assert not (set(reg._FRONT) & set(reg._NEXT_ROUNDS))
-    planned = set(reg._FRONT) | set(reg._NEXT_ROUNDS) | set(reg._RETEST)
-    assert planned <= set(qs), f"planned keys not registered: {planned - set(qs)}"
-    # The seen-overlap checks only make sense in the pending state — once
-    # the planned round's report lands, _FRONT keys are seen BY DESIGN.
-    # A seen key in _FRONT is legitimate ONLY as a deliberate retest.
-    if reg.LATEST_DRIVER_ROUND == reg._PLANNED_AFTER_ROUND:
-        assert not (set(reg._FRONT) & reg.DRIVER_SEEN - set(reg._RETEST))
-        assert not (set(reg._NEXT_ROUNDS) & reg.DRIVER_SEEN)
-
-
-def test_round6_window_closes_driver_exposure(registry):
-    """VERDICT r4 item 2, updated for the round-5 additions: once the
-    round-5 report lands, driver windows must lead with every residual
-    never-tested key before spending slots on already-green backfills.
-    Round 5 ultimately added ~70 new operators, so the residual spans
-    FOUR 50-key windows — the ordering guarantees (tiers 3/4 ahead of
-    tier 5) close exposure mechanically across rounds 6-9."""
-    from hive_test_spark import registry as reg
-
-    qs, _ = registry
-    # Simulate the post-r5 state: everything in the pending _FRONT window
-    # is seen (the driver tests exactly those 50), _FRONT expires.
-    future_seen = reg.DRIVER_SEEN | set(reg._FRONT)
-    residual = [k for k in qs if k not in future_seen]
-    # Capacity guard: the residual must fit the driver windows remaining
-    # before the final round (20 rounds total, 50 keys each, and the
-    # current round's window is already staged). Late-round additions
-    # are fine as long as they stay sequenced and inside this budget.
-    rounds_left = 20 - max(6, reg.LATEST_DRIVER_ROUND + 1)
-    assert len(residual) <= 50 * rounds_left, (
-        f"{len(residual)} unseen keys cannot fit the remaining "
-        f"{rounds_left} driver windows"
-    )
-    unsequenced = [k for k in residual if k not in reg._NEXT_ROUNDS]
-    assert not unsequenced, (
-        "unseen keys missing from _NEXT_ROUNDS (add them when adding "
-        f"operators): {unsequenced}"
-    )
-    if not residual:
-        # Goal state: every key has a driver row — nothing to sequence.
-        return
-    # Every residual key outranks every already-seen key, so windows 6
-    # and 7 consist of residual keys first — no backfill displaces them.
-    idx = {k: i for i, k in enumerate(qs)}
-    worst_residual = max(
-        reg._rank(k, idx[k]) for k in residual
-    )
-    best_seen = min(
-        (reg._rank(k, idx[k]) for k in qs if k in future_seen and k not in residual),
-        default=None,
-    )
-    if best_seen is not None and worst_residual[0] >= 5:
-        raise AssertionError("residual key fell into the seen tier")
 
 
 def test_survey_inventory_totals_match_table_rows(registry):
@@ -218,310 +118,6 @@ def test_survey_inventory_totals_match_table_rows(registry):
     )
 
 
-def test_driver_exposure_closes_in_min_rounds(registry):
-    """VERDICT r5 item 2 (renamed per VERDICT r6 item 5 — the old
-    `..._by_round9` name predated the round-6 additions that moved the
-    priced bound), generalized for late-round additions: simulate
-    future driver rounds — each round tests exactly ordered_keys()[:50];
-    marking those seen must leave ZERO never-tested keys after
-    ceil(residual/50) rounds (the MINIMUM possible — i.e. no window
-    wastes a slot on a seen key while a never-tested key waits), with no
-    key dropped from any window. The priced closure round is computed
-    and asserted explicitly in the failure message; with the r1-r6
-    reports on disk it is round 10."""
-    import math
-
-    from hive_test_spark import registry as reg
-
-    qs, _ = registry
-    idx = {k: i for i, k in enumerate(qs)}
-    # Pending work mirrors the REAL scheduler's non-tier-5 population:
-    # never-tested keys, plus latest-row-red keys (tier 0) and unexpired
-    # retests (tier 2) — the latter two are driver-seen yet legitimately
-    # consume window slots, so the simulation must charge for them.
-    retest_pending = frozenset(
-        k
-        for k in reg._RETEST
-        if reg.DRIVER_LAST_ROUND.get(k, 0) <= reg._PLANNED_AFTER_ROUND
-    )
-    consumed = {
-        k
-        for k in reg.DRIVER_SEEN
-        if k not in retest_pending and k not in reg.DRIVER_FAILED
-    }
-
-    def rank_with(consumed_now, key):
-        # reg._rank with the simulated consumed set and _FRONT expired.
-        if key in reg.DRIVER_FAILED and key not in consumed_now:
-            return (0, 0, idx[key])
-        if key in retest_pending and key not in consumed_now:
-            return (2, reg._RETEST.index(key), idx[key])
-        if key in consumed_now or key in reg.DRIVER_SEEN:
-            return (5, 0, idx[key])
-        if key in reg._NEXT_ROUNDS:
-            return (3, reg._NEXT_ROUNDS.index(key), idx[key])
-        return (4, 0, idx[key])
-
-    pending = [k for k in qs if k not in consumed]
-    min_rounds = math.ceil(len(pending) / 50)
-    for rnd in range(min_rounds):
-        window = sorted(qs, key=lambda k: rank_with(consumed, k))[:50]
-        # Zero-waste invariant: while pending keys remain, no window slot
-        # may go to an already-consumed key.
-        remaining = sum(1 for k in qs if k not in consumed)
-        stale = [k for k in window if k in consumed]
-        allowed_backfill = max(0, 50 - remaining)
-        assert len(stale) <= allowed_backfill, (
-            f"round {rnd + 6} wasted slots on: {stale[:5]}"
-        )
-        consumed |= set(window)
-    # EXPOSURE closure (a hard driver row per key — red rows are rows;
-    # re-earning a red is the tier-0 scheduler's job, priced separately
-    # below) is bounded at _CLOSURE_ROUND while the plan is pending.
-    # Once that report lands the bound is a HISTORICAL fact: every key
-    # has a row, and only keys registered after closure may still price
-    # future rounds (they close at the minimum ceil/50 rate).
-    has_row = reg.DRIVER_SEEN | reg.DRIVER_FAILED
-    if reg.LATEST_DRIVER_ROUND < reg._CLOSURE_ROUND:
-        closure_round = reg.LATEST_DRIVER_ROUND + min_rounds
-        assert closure_round <= reg._CLOSURE_ROUND, (
-            f"priced closure round {closure_round} > {reg._CLOSURE_ROUND}: "
-            f"registry growth has pushed full driver exposure past the "
-            f"planned bound ({len(pending)} pending / 50 per round after "
-            f"driver round {reg.LATEST_DRIVER_ROUND})"
-        )
-    else:
-        unexposed = [k for k in qs if k not in has_row]
-        assert math.ceil(len(unexposed) / 50) <= min_rounds, (
-            f"{len(unexposed)} post-closure additions cannot close at the "
-            f"minimum rate: {unexposed[:10]}"
-        )
-        # Latest-red keys must lead the very next window (tier 0): the
-        # round after a red row re-earns it before anything else runs.
-        head = reg.ordered_keys()[: max(1, len(reg.DRIVER_FAILED))]
-        missing_reds = sorted(reg.DRIVER_FAILED - frozenset(head))
-        assert not missing_reds, (
-            f"driver-red keys not at the head of the next window "
-            f"(tier-0 violated): {missing_reds}"
-        )
-    never = [k for k in qs if k not in consumed]
-    assert not never, (
-        f"{len(never)} keys still lack a driver row after "
-        f"{min_rounds} more rounds: {never[:10]}"
-    )
-
-
-def test_staged_windows_partition_the_residual(registry):
-    """VERDICT r6 item 8: SURVEY §2.M records the exact round-8/9/10
-    driver windows so a fresh-context round can verify the plan without
-    re-deriving it. This test re-runs the scheduler simulation and pins
-    the documented window membership to it — if a registry change moves
-    a key between windows, the doc must move with it (the lockstep
-    convention). The three documented fresh sets plus the already-seen
-    round-7 window must exactly partition the never-tested residual."""
-    import os
-    import re
-
-    from hive_test_spark import registry as reg
-
-    qs, _ = registry
-    idx = {k: i for i, k in enumerate(qs)}
-    retest_pending = frozenset(
-        k
-        for k in reg._RETEST
-        if reg.DRIVER_LAST_ROUND.get(k, 0) <= reg._PLANNED_AFTER_ROUND
-    )
-    consumed = {
-        k
-        for k in reg.DRIVER_SEEN
-        if k not in retest_pending and k not in reg.DRIVER_FAILED
-    }
-
-    def rank_with(consumed_now, key):
-        if key in reg.DRIVER_FAILED and key not in consumed_now:
-            return (0, 0, idx[key])
-        if key in retest_pending and key not in consumed_now:
-            return (2, reg._RETEST.index(key), idx[key])
-        if key in consumed_now or key in reg.DRIVER_SEEN:
-            return (5, 0, idx[key])
-        if key in reg._NEXT_ROUNDS:
-            return (3, reg._NEXT_ROUNDS.index(key), idx[key])
-        return (4, 0, idx[key])
-
-    # Anchor the simulation at the latest landed driver report (ADVICE r7:
-    # a hard-coded start round goes stale the moment the next
-    # CORRECTNESS_r*.json lands, because DRIVER_SEEN already contains that
-    # round's window and every comparison shifts by one). Only rounds that
-    # have NOT yet landed are simulated and compared.
-    latest = reg.LATEST_DRIVER_ROUND
-    simulated = {}
-    for rnd in range(latest + 1, 11):
-        window = sorted(qs, key=lambda k: rank_with(consumed, k))[:50]
-        simulated[rnd] = frozenset(k for k in window if k not in consumed)
-        consumed |= set(window)
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "SURVEY.md")) as fh:
-        survey = fh.read()
-    documented = {
-        int(m.group(1)): frozenset(m.group(2).split())
-        for m in re.finditer(
-            r"Round (\d+) \(\d+ fresh[^)]*\):\s*\n`([^`]+)`", survey
-        )
-    }
-    assert set(documented) == {8, 9, 10}, (
-        f"SURVEY §2.M must document exactly rounds 8-10, got {sorted(documented)}"
-    )
-    for rnd in sorted(documented):
-        if rnd <= latest:
-            # This documented window already landed; its keys must all
-            # have a hard driver row — red rows ARE rows (exposure
-            # closed; re-earning a red is the tier-0 scheduler's job,
-            # asserted in test_driver_exposure_closes_in_min_rounds).
-            landed_missing = sorted(
-                documented[rnd] - (reg.DRIVER_SEEN | reg.DRIVER_FAILED)
-            )
-            assert not landed_missing, (
-                f"round-{rnd} is documented as landed but these keys have "
-                f"no driver row: {landed_missing[:5]}"
-            )
-            continue
-        extra = sorted(documented[rnd] - simulated[rnd])
-        missing = sorted(simulated[rnd] - documented[rnd])
-        assert not extra and not missing, (
-            f"round-{rnd} window drift vs SURVEY §2.M — "
-            f"doc-only: {extra[:5]}, sim-only: {missing[:5]}"
-        )
-    # Partition check: the not-yet-landed documented windows cover every
-    # never-tested key exactly once. Post-closure there are no pending
-    # documented windows; never-exposed keys are then POST-CLOSURE
-    # ADDITIONS whose coverage is the rotation policy's job — assert the
-    # scheduler places every one of them ahead of all tier-5 backfills
-    # in the next window (right behind tier-0 reds / tier-2 retests).
-    pending_rounds = [r for r in sorted(documented) if r > latest]
-    union = frozenset().union(*(documented[r] for r in pending_rounds)) if pending_rounds else frozenset()
-    never = frozenset(
-        k for k in qs if k not in (reg.DRIVER_SEEN | reg.DRIVER_FAILED)
-    )
-    if latest < reg._CLOSURE_ROUND:
-        assert union == never, (
-            f"windows do not partition the residual: "
-            f"uncovered={sorted(never - union)[:5]}, "
-            f"spurious={sorted(union - never)[:5]}"
-        )
-        sizes = sum(len(documented[r]) for r in pending_rounds)
-        assert sizes == len(never), "windows overlap — not a partition"
-    else:
-        head_budget = len(reg.DRIVER_FAILED) + len(never) + len(
-            reg._RETEST_SINCE
-        )
-        head = frozenset(reg.ordered_keys()[:head_budget]) if head_budget else frozenset()
-        dropped = sorted(never - head)
-        assert not dropped, (
-            f"post-closure additions not scheduled ahead of backfills: "
-            f"{dropped[:5]}"
-        )
-
-
-def test_post_closure_rotation_re_earns_every_row(registry):
-    """SURVEY §M rounds-11-20 policy (planned in round 10, VERDICT r9
-    item 2): once the round-10 report closes exposure, tier-5 backfills
-    rotate STALEST-ROW-FIRST (ordered by DRIVER_LAST_ROUND, then
-    registration index), so every registered key re-earns a fresh
-    driver row within ceil(N/50) rounds — the whole registry
-    re-verifies across rounds 11-20 instead of re-testing the same
-    registration-order prefix forever. This test simulates the
-    scheduler forward from the on-disk reports and pins both halves:
-
-    - pre-closure (pending round-10 report): the rotation is INERT —
-      the window is still the staged 34-fresh + 16-backfill plan;
-    - post-closure: simulated from the REAL on-disk report state (not
-      a hardcoded closure round — the r11 judge found the hardcoded
-      seed under-budgeted the horizon the moment a post-closure report
-      landed), the next ceil(N/50) windows cover EVERY key, and a
-      _RETEST_SINCE entry pre-empts the rotation until a later round's
-      row lands.
-
-    The pinned guarantee is a ROLLING STALENESS BOUND, restated in
-    round 12 per VERDICT r11 item 2: from ANY report state, every key
-    re-earns a fresh row within the next ceil(N/50) windows of the
-    then-current registry. It is provable for pure stalest-first: a
-    key picked in window W is re-picked only after every key staler
-    than W has been picked, so no key is picked twice before all are
-    picked once — any ceil(N/50) consecutive windows cover all N keys.
-    Registry growth extends the horizon only by the additions (each
-    new key consumes one slot); the build plan freezes additions from
-    round 17 (SURVEY §M) so the final windows are pure rotation. The
-    ORIGINAL "whole registry re-verifies across rounds 11-20" phrasing
-    is NOT re-pinned — with ~10 additions/round it stopped being
-    arithmetically keepable and the honest bound is the rolling one."""
-    from hive_test_spark import registry as reg
-
-    qs, _ = registry
-    idx = {k: i for i, k in enumerate(qs)}
-    n_rounds = -(-len(qs) // 50)  # ceil
-
-    if reg.LATEST_DRIVER_ROUND < reg._CLOSURE_ROUND:
-        # Pending state: flipping the closure gate must be the ONLY
-        # thing that changes the ordering — the staged round-10 window
-        # is untouched by the policy addition.
-        window = list(qs)[:50]
-        fresh = [k for k in window if k not in reg.DRIVER_SEEN]
-        assert len(fresh) >= 1, "pending window must lead with unseen keys"
-        assert all(
-            k not in reg.DRIVER_SEEN or k in reg._RETEST
-            for k in window[: len(fresh)]
-        )
-
-    # Simulate forward from the REAL on-disk state: the currently
-    # staged pending window (ordered_keys()[:50] — whatever tiers
-    # compose it) lands in the round after the newest report (round
-    # _CLOSURE_ROUND at the earliest), then subsequent windows rotate
-    # stalest-first. Seeding from DRIVER_LAST_ROUND instead of a
-    # hardcoded closure round keeps this green for ANY future report
-    # state — the r10/r11 failure class (suite breaking the moment the
-    # driver report lands) is dead by construction.
-    start = max(reg.LATEST_DRIVER_ROUND + 1, reg._CLOSURE_ROUND)
-    last = dict(reg.DRIVER_LAST_ROUND)
-    for k in qs:
-        last.setdefault(k, 0)
-    pending = reg.ordered_keys()[:50]
-    for k in pending:
-        last[k] = start
-    retested: set = set(pending)
-    for rnd in range(start + 1, start + n_rounds):
-        window = sorted(qs, key=lambda k: (last.get(k, 0), idx[k]))[:50]
-        retested |= set(window)
-        for k in window:
-            last[k] = rnd
-    missing = [k for k in qs if k not in retested]
-    assert not missing, (
-        f"{len(missing)} keys never re-earn a row in the {n_rounds} "
-        f"windows from round {start}: {missing[:5]}"
-    )
-    # Rolling bound tightness: after those ceil(N/50) windows, no
-    # key's simulated row is staler than the simulation start — the
-    # staleness floor the restated guarantee promises.
-    floor = min(last[k] for k in qs)
-    assert floor >= start, (
-        f"staleness floor {floor} < simulation start {start}"
-    )
-
-    # Retest pre-emption: a behavior change queued via _RETEST_SINCE
-    # ranks tier 2 (ahead of every tier-5 backfill) until a LATER
-    # round's row lands, then expires — exercise reg._rank directly.
-    probe = sorted(k for k in reg.DRIVER_SEEN if k not in reg._RETEST_SINCE)[0]
-    saved = dict(reg._RETEST_SINCE)
-    try:
-        reg._RETEST_SINCE[probe] = reg.LATEST_DRIVER_ROUND + 1
-        assert reg._rank(probe, idx[probe])[0] == 2
-        reg._RETEST_SINCE[probe] = reg.DRIVER_LAST_ROUND.get(probe, 0) - 1
-        assert reg._rank(probe, idx[probe])[0] == 5  # expired: back to pool
-    finally:
-        reg._RETEST_SINCE.clear()
-        reg._RETEST_SINCE.update(saved)
-
-
 def test_every_registered_key_is_documented_in_survey(registry):
     """SURVEY.md §2 is the coverage checklist the judge reads line by
     line — a registered operator missing from it is invisible to the
@@ -536,3 +132,95 @@ def test_every_registered_key_is_documented_in_survey(registry):
         survey = fh.read()
     missing = [k for k in qs if f"`{k}`" not in survey]
     assert not missing, f"keys not documented in SURVEY.md §2: {missing}"
+
+
+def test_driver_rank_orders_failed_then_stalest_then_registration(registry, monkeypatch):
+    """ordered_keys(): keys whose latest driver row failed come first,
+    then staler rows before newer ones (a key with no row counts as
+    round 0), then registration order."""
+    from hive_test_spark import registry as reg
+
+    keys = list(reg.QUERIES)
+    k0, k1, k2, k3, k4 = keys[:5]
+    last = {k: 10 for k in keys}
+    last.update({k0: 12, k1: 7, k3: 7})
+    del last[k4]  # registered after the newest report: no row yet
+    monkeypatch.setattr(reg, "DRIVER_FAILED", frozenset({k2}))
+    monkeypatch.setattr(reg, "DRIVER_LAST_ROUND", last)
+    order = reg.ordered_keys()
+    assert sorted(order) == sorted(keys) and len(set(order)) == len(keys)
+    assert order[:4] == [k2, k4, k1, k3]
+    assert order[4:-1] == keys[5:]
+    assert order[-1] == k0
+
+
+def test_registry_envelope_retunes_and_labels_jobs(spark):
+    """QUERIES[key] re-applies session.tune before the query function runs
+    (so a conf changed by the caller or an earlier key is reset) and
+    labels the session's jobs with the key; @register still returns the
+    raw function for direct calls."""
+    from hive_test_spark import registry as reg
+    from hive_test_spark.operators.relational import project_select
+    from tests.conftest import SF_DIR
+
+    sc = spark.sparkContext
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        reg.QUERIES["project_select"](spark, SF_DIR)
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+        assert sc.getLocalProperty("spark.job.description") == "project_select"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        sc.setLocalProperty("spark.job.description", None)
+    assert reg.QUERIES["project_select"].__wrapped__ is project_select
+
+
+def test_scoped_conf_restores_unsets_and_survives_errors(spark):
+    from hive_test_spark.session import scoped_conf
+
+    had, fresh = "spark.sql.cbo.enabled", "spark.hts.test.scoped_conf"
+    before = spark.conf.get(had, None)
+    spark.conf.set(had, "false")
+    try:
+        with scoped_conf(spark, {had: "true", fresh: "1"}):
+            assert spark.conf.get(had) == "true"
+            assert spark.conf.get(fresh) == "1"
+        assert spark.conf.get(had) == "false"
+        assert spark.conf.get(fresh, None) is None
+        with pytest.raises(RuntimeError):
+            with scoped_conf(spark, {had: "true", fresh: "1"}):
+                raise RuntimeError("query failed")
+        assert spark.conf.get(had) == "false"
+        assert spark.conf.get(fresh, None) is None
+    finally:
+        if before is None:
+            spark.conf.unset(had)
+        else:
+            spark.conf.set(had, before)
+
+
+def test_registered_functions_do_not_call_tune():
+    """The registry envelope runs session.tune for every key; a query
+    function calling it again is boilerplate growing back."""
+    import ast
+    import glob
+    import os
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "hive_test_spark")
+    offenders = []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef) or not any(
+                isinstance(d, ast.Call)
+                and getattr(d.func, "id", getattr(d.func, "attr", "")).endswith("register")
+                for d in fn.decorator_list
+            ):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Call) and "tune" in (
+                    getattr(node.func, "id", None), getattr(node.func, "attr", None)
+                ):
+                    offenders.append(f"{os.path.relpath(path, pkg)}:{fn.name}")
+    assert not offenders, f"registered functions calling tune(): {offenders}"

@@ -43,7 +43,7 @@ def main() -> int:
     from hive_test_spark.api import queries
 
     qs = queries()
-    keys = args.keys or [k for k in qs if k not in reg.DRIVER_SEEN]
+    keys = args.keys or [k for k in qs if k not in reg.DRIVER_LAST_ROUND]
     spark = get_spark("determinism-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -52,11 +52,12 @@ def main() -> int:
     for key in keys:
         t0 = time.time()
         try:
-            # Route through $SPARK_GRAFT_SHUFFLE_PARTITIONS: every query
-            # calls tune(), which (re-)applies session.shuffle_partitions
-            # at build time — a bare spark.conf.set here is clobbered
-            # before execution (r12 fix: the old conf.set probe never
-            # actually ran the second leg under a different layout).
+            # Route through $SPARK_GRAFT_SHUFFLE_PARTITIONS: the registry
+            # envelope calls tune() before every key, which (re-)applies
+            # session.shuffle_partitions at build time — a bare
+            # spark.conf.set here is clobbered before execution (r12 fix:
+            # the old conf.set probe never actually ran the second leg
+            # under a different layout).
             os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"] = "32"
             a = qs[key](spark, args.sf).toPandas()
             os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"] = "17"
