@@ -154,6 +154,83 @@ def test_driver_rank_orders_failed_then_stalest_then_registration(registry, monk
     assert order[-1] == k0
 
 
+def _drive_windows(reg, monkeypatch, failed, last, first_round, n_rounds):
+    """Run ``n_rounds`` driver windows of 50 keys through the real
+    scheduler: each round tests ordered_keys()[:50], and every tested key
+    gets a green row for that round. Returns the windows."""
+    windows = []
+    for rnd in range(first_round, first_round + n_rounds):
+        monkeypatch.setattr(reg, "DRIVER_FAILED", frozenset(failed))
+        monkeypatch.setattr(reg, "DRIVER_LAST_ROUND", dict(last))
+        window = reg.ordered_keys()[:50]
+        windows.append(window)
+        for k in window:
+            failed.discard(k)
+            last[k] = rnd
+    return windows
+
+
+def test_driver_exposure_closes_in_min_rounds(registry, monkeypatch):
+    """From the on-disk reports, every key with no driver row or a red
+    latest row is re-earned in ceil(pending/50) windows — the minimum:
+    no window spends a slot on a green key while a pending key waits,
+    and red keys lead the very next window."""
+    import math
+
+    from hive_test_spark import registry as reg
+
+    qs, _ = registry
+    failed = set(reg.DRIVER_FAILED) & set(qs)
+    last = dict(reg.DRIVER_LAST_ROUND)
+    pending = {k for k in qs if k in failed or k not in last}
+    head = reg.ordered_keys()[: len(failed)]
+    assert set(head) == failed, (
+        f"driver-red keys not at the head of the next window: "
+        f"{sorted(failed - set(head))[:5]}"
+    )
+    min_rounds = math.ceil(len(pending) / 50)
+    start = max(last.values(), default=0) + 1
+    waiting = set(pending)
+    for rnd, window in enumerate(
+        _drive_windows(reg, monkeypatch, failed, last, start, min_rounds)
+    ):
+        wasted = [k for k in window if k not in waiting]
+        assert len(wasted) <= max(0, 50 - len(waiting)), (
+            f"window {start + rnd} spent slots on green keys while "
+            f"{len(waiting)} pending keys waited: {wasted[:5]}"
+        )
+        waiting -= set(window)
+    assert not waiting, (
+        f"{len(waiting)} keys still lack a green driver row after "
+        f"{min_rounds} windows: {sorted(waiting)[:10]}"
+    )
+
+
+def test_post_closure_rotation_re_earns_every_row(registry, monkeypatch):
+    """Stalest-row-first rotation gives a rolling staleness bound: from
+    the on-disk reports, the next ceil(N/50) windows give every
+    registered key a fresh driver row, and no key is tested twice
+    before every key has been tested once."""
+    from hive_test_spark import registry as reg
+
+    qs, _ = registry
+    n_rounds = -(-len(qs) // 50)  # ceil
+    failed = set(reg.DRIVER_FAILED) & set(qs)
+    last = dict(reg.DRIVER_LAST_ROUND)
+    start = max(last.values(), default=0) + 1
+    windows = _drive_windows(reg, monkeypatch, failed, last, start, n_rounds)
+    tested = [k for w in windows for k in w]
+    missing = sorted(set(qs) - set(tested))
+    assert not missing, (
+        f"{len(missing)} keys never re-earn a row in the {n_rounds} "
+        f"windows from round {start}: {missing[:5]}"
+    )
+    repeated = len(qs) - len(set(tested[: len(qs)]))
+    assert repeated == 0, f"{repeated} keys tested twice before all once"
+    floor = min(last[k] for k in qs)
+    assert floor >= start, f"staleness floor {floor} < simulation start {start}"
+
+
 def test_registry_envelope_retunes_and_labels_jobs(spark):
     """QUERIES[key] re-applies session.tune before the query function runs
     (so a conf changed by the caller or an earlier key is reset) and
